@@ -5,7 +5,8 @@ S2/H3-style spatial pruning index reimagined for Spark: a cell id is a
 quadtree on the plate-carree plane. The packing is plain shifts so the
 POINT side of every join computes its cell id with JVM column
 expressions inside whole-stage codegen (cell_col below) — zero Python
-on the big side. ``morton_key`` provides the Z-order interleave when
+on the big side — and the polygon side's bbox cover is a JVM
+sequence-explode of the same grid arithmetic (cover_cells). ``morton_key`` provides the Z-order interleave when
 range partitioning wants spatial locality
 (``repartitionByRange(morton_key(cell_id))`` co-locates neighboring
 geometry — the property the reference's single-node stream never
@@ -91,22 +92,61 @@ def morton_key(cell: np.ndarray) -> np.ndarray:
     return ((np.asarray(level).astype(np.uint64) << LEVEL_SHIFT) | m).astype(np.int64)
 
 
+def grid_xy_col(lon, lat, level):
+    """JVM twin of lonlat_to_xy: the clipped grid (x, y) long columns
+    of (lon, lat) at `level` — an int, or an int Column for per-row
+    levels. Same double arithmetic and clipping as the NumPy path, so
+    the two agree bit-for-bit."""
+    from pyspark.sql import Column
+    from pyspark.sql import functions as F
+
+    lv = level if isinstance(level, Column) else F.lit(level)
+    n = F.call_function("shiftleft", F.lit(1).cast("long"), lv)
+
+    def clip(g):
+        return F.greatest(F.least(F.floor(g).cast("long"), n - 1), F.lit(0))
+
+    return clip((lon + 180.0) / 360.0 * n), clip((90.0 - lat) / 180.0 * n)
+
+
 def cell_col(lon, lat, level: int):
     """JVM column expression for the cell id of (lon, lat) at `level`
     — identical arithmetic to cell_encode, kept inside whole-stage
     codegen (the point side of the PIP join never leaves the JVM)."""
     from pyspark.sql import functions as F
 
-    n = 1 << level
-    x = F.floor((lon + 180.0) / 360.0 * n).cast("long")
-    y = F.floor((90.0 - lat) / 180.0 * n).cast("long")
-    x = F.greatest(F.least(x, F.lit(n - 1)), F.lit(0))
-    y = F.greatest(F.least(y, F.lit(n - 1)), F.lit(0))
+    x, y = grid_xy_col(lon, lat, level)
     return (
         F.lit(level << 58).cast("long")
         + F.shiftleft(x, 29).cast("long")
         + y
     ).alias(f"cell_l{level}")
+
+
+def cover_cells(df, minx, miny, maxx, maxy, level):
+    """Explode each row of `df` to the cells covering its bbox at
+    `level` (an int, or an int Column for per-row adaptive levels):
+    JVM sequence + two explodes, the polygon-side twin of cell_col.
+    Adds `cell_id`; a row with a null bbox (empty geometry) yields no
+    rows. At the level covering_bbox picks (operators/pip.py
+    _cover_level_col) the cells equal covering_bbox's."""
+    from pyspark.sql import Column
+    from pyspark.sql import functions as F
+
+    x0, y1 = grid_xy_col(minx, miny, level)
+    x1, y0 = grid_xy_col(maxx, maxy, level)
+    lv = level if isinstance(level, Column) else F.lit(level)
+    # greatest/least skip nulls, so a null bbox would clip to a cell
+    boxed = minx.isNotNull() & miny.isNotNull() & maxx.isNotNull() & maxy.isNotNull()
+    return (
+        df.withColumn("_cx", F.explode(F.when(boxed, F.sequence(x0, x1))))
+        .withColumn("_cy", F.explode(F.sequence(y0, y1)))
+        .withColumn(
+            "cell_id",
+            F.shiftleft(lv.cast("long"), 58) + F.shiftleft(F.col("_cx"), 29) + F.col("_cy"),
+        )
+        .drop("_cx", "_cy")
+    )
 
 
 def cell_encode(lon: np.ndarray, lat: np.ndarray, level: int) -> np.ndarray:
@@ -189,11 +229,7 @@ def morton_col(lon, lat, level: int):
     via Spark's range sampling)."""
     from pyspark.sql import functions as F
 
-    n = 1 << level
-    x = F.floor((lon + 180.0) / 360.0 * n).cast("long")
-    y = F.floor((90.0 - lat) / 180.0 * n).cast("long")
-    x = F.greatest(F.least(x, F.lit(n - 1)), F.lit(0))
-    y = F.greatest(F.least(y, F.lit(n - 1)), F.lit(0))
+    x, y = grid_xy_col(lon, lat, level)
 
     def spread(v):
         for shift, mask in (

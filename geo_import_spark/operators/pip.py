@@ -4,8 +4,9 @@ The reference has no spatial join at all (SURVEY.md §2.4); this is the
 new engine's core physical strategy (§4.2.1-2):
 
   1. polygons -> bbox (JVM-side array_min/max) -> adaptive quadtree cell
-     covering (pandas UDF; per-polygon level chosen so |cover| <= max_cells,
-     bounding candidate blow-up) -> explode to (cell_id, poly)
+     covering, all JVM column expressions (per-polygon level chosen so
+     |cover| <= max_cells, bounding candidate blow-up; cells.cover_cells
+     sequence-explodes it) -> (cell_id, poly)
   2. points -> cell id at every level present in the polygon covering
      (usually 2-4 levels) -> explode
   3. equi-join on cell_id (hash/sort-merge; cell ids are Morton codes so
@@ -26,7 +27,8 @@ new engine's core physical strategy (§4.2.1-2):
 
 Scale notes (100 TB): the shuffle key is cell_id — bounded fan-out on
 both sides (points x |levels|, polys x max_cells). The physical plan
-is AUTO-SELECTED by a one-job size estimate of the polygon side:
+is AUTO-SELECTED by one planning aggregate over the polygon side
+(size estimate + cover levels):
 within the broadcast budget the point side is never shuffled at all;
 beyond it the shuffle join is chosen — the driver never collects an
 unbounded polygon side. Hot cells (a city cell holding millions of
@@ -81,39 +83,6 @@ def release_ring_broadcasts() -> int:
             pass
     return n
 
-COVER_TYPE = T.StructType(
-    [
-        T.StructField("cells", T.ArrayType(T.LongType())),
-        T.StructField("level", T.IntegerType()),
-    ]
-)
-
-
-def make_covering_udf(base_level: int, max_cells: int):
-    @pandas_udf(COVER_TYPE)
-    def covering(minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series) -> pd.DataFrame:
-        out_cells, out_level = [], []
-        for a, b, c, d in zip(minx.values, miny.values, maxx.values, maxy.values):
-            if np.isnan(a):
-                out_cells.append([])
-                out_level.append(base_level)
-                continue
-            cover, lv = cellmod.covering_bbox(a, b, c, d, base_level, max_cells)
-            out_cells.append(cover.tolist())
-            out_level.append(lv)
-        return pd.DataFrame({"cells": out_cells, "level": out_level})
-
-    return covering
-
-
-def make_cell_udf(level: int):
-    @pandas_udf(T.LongType())
-    def cell_at(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cellmod.cell_encode(lon.values, lat.values, level))
-
-    return cell_at
-
-
 @pandas_udf(T.BooleanType())
 def pip_contains(
     lon: pd.Series, lat: pd.Series, ring_offsets: pd.Series, xs: pd.Series, ys: pd.Series
@@ -152,24 +121,27 @@ def pip_contains(
     return pd.Series(res)
 
 
-def polygon_covering(polygons: DataFrame, base_level: int = 13, max_cells: int = 64) -> DataFrame:
-    """polygons(poly_id, geom) -> (poly_id, cell_id, level, bbox)
-    exploded cover. The bbox rides along so the join can prune
-    candidates JVM-side before the exact ray cast."""
-    covering_udf = make_covering_udf(base_level, max_cells)
-    boxed = polygons.select(
-        "poly_id",
+_BBOX = ("minx", "miny", "maxx", "maxy")
+
+
+def _bbox_cols():
+    return [
         F.array_min("geom.xs").alias("minx"),
         F.array_min("geom.ys").alias("miny"),
         F.array_max("geom.xs").alias("maxx"),
         F.array_max("geom.ys").alias("maxy"),
-    ).withColumn("cover", covering_udf("minx", "miny", "maxx", "maxy"))
-    return boxed.select(
-        "poly_id",
-        "minx", "miny", "maxx", "maxy",
-        F.col("cover.level").alias("level"),
-        F.explode("cover.cells").alias("cell_id"),
-    )
+    ]
+
+
+def polygon_covering(polygons: DataFrame, base_level: int = 13, max_cells: int = 64) -> DataFrame:
+    """polygons(poly_id, geom) -> (poly_id, bbox, level, cell_id)
+    exploded adaptive cover, all JVM column expressions (cells.cover_cells
+    at _cover_level_col's per-polygon level). The bbox rides along so
+    the join can prune candidates JVM-side before the exact ray cast."""
+    bbox = [F.col(c) for c in _BBOX]
+    boxed = polygons.select("poly_id", *_bbox_cols())
+    boxed = boxed.withColumn("level", _cover_level_col(*bbox, base_level, max_cells))
+    return cellmod.cover_cells(boxed, *bbox, F.col("level"))
 
 
 def make_pip_bcast_udf(rings_bc):
@@ -287,24 +259,17 @@ def _collect_rings_and_cover(polygons: DataFrame, base_level: int, max_cells: in
 
 def _cover_level_col(minx, miny, maxx, maxy, base_level: int, max_cells: int):
     """JVM mirror of cells.covering_bbox's level choice: the finest
-    level <= base_level whose bbox grid cover has <= max_cells cells
-    (identical double arithmetic + clipping => bit-identical to the
-    NumPy path). Lets the shuffle join probe the distinct cover levels
-    with a pure-JVM aggregate — no covering UDF pass, no persist."""
+    level <= base_level whose bbox grid cover has <= max_cells cells,
+    else 1 (identical double arithmetic + clipping => bit-identical to
+    the NumPy path)."""
 
-    def ncells(lv: int):
-        n = 1 << lv
-        def grid(v, flip: bool):
-            g = F.floor(((90.0 - v) if flip else (v + 180.0)) / (180.0 if flip else 360.0) * n).cast("long")
-            return F.greatest(F.least(g, F.lit(n - 1)), F.lit(0))
-        nx = grid(maxx, False) - grid(minx, False) + 1
-        ny = grid(miny, True) - grid(maxy, True) + 1
-        return nx * ny
+    def fits(lv):
+        x0, y1 = cellmod.grid_xy_col(minx, miny, lv)
+        x1, y0 = cellmod.grid_xy_col(maxx, maxy, lv)
+        return (x1 - x0 + 1) * (y1 - y0 + 1) <= max_cells
 
-    expr = F.when(ncells(base_level) <= max_cells, base_level)
-    for lv in range(base_level - 1, 1, -1):
-        expr = expr.when(ncells(lv) <= max_cells, lv)
-    return expr.otherwise(1).cast("int")
+    levels = F.filter(F.sequence(F.lit(base_level), F.lit(1), F.lit(-1)), fits)
+    return F.coalesce(F.get(levels, 0), F.lit(1)).cast("int")
 
 
 # Auto-salting knobs (shuffle mode): a cell is "hot" when it exceeds
@@ -342,19 +307,33 @@ def auto_salt_factor(points: DataFrame, level: int) -> int:
     return max(1, min(MAX_AUTO_SALT, s))
 
 
-def estimate_polygon_side_bytes(polygons: DataFrame) -> tuple[int, int]:
-    """(n_polys, estimated broadcast bytes) for the polygon side — one
-    column-pruned aggregate job: rows x fixed overhead + vertices x 16
-    bytes (two float64 per vertex). Drives the auto broadcast/shuffle
-    plan choice; deliberately conservative (counts cover + dict + Row
-    overhead per polygon)."""
-    row = polygons.agg(
+def plan_polygon_side(
+    polygons: DataFrame, base_level: int = 13, max_cells: int = 64
+) -> tuple[int, int, list[int]]:
+    """(n_polys, estimated broadcast bytes, sorted distinct cover
+    levels) from ONE column-pruned aggregate over the polygon side.
+    Bytes are rows x fixed overhead + vertices x 16 (two float64 per
+    vertex) — deliberately conservative (counts cover + dict + Row
+    overhead per polygon); they drive the auto broadcast/shuffle
+    choice. The bbox is selected before the aggregate so every level
+    test reads it once."""
+    boxed = polygons.select(F.size("geom.xs").alias("nv"), *_bbox_cols())
+    row = boxed.agg(
         F.count("*").alias("n"),
-        F.sum(F.size("geom.xs")).alias("verts"),
+        F.sum("nv").alias("verts"),
+        F.collect_set(F.when(F.col("minx").isNotNull(), _cover_level_col(
+            *[F.col(c) for c in _BBOX], base_level, max_cells
+        ))).alias("levels"),
     ).collect()[0]
     n = row["n"] or 0
     verts = row["verts"] or 0
-    return n, n * _POLY_OVERHEAD_BYTES + verts * 16
+    return n, n * _POLY_OVERHEAD_BYTES + verts * 16, sorted(row["levels"])
+
+
+def estimate_polygon_side_bytes(polygons: DataFrame) -> tuple[int, int]:
+    """(n_polys, estimated broadcast bytes): plan_polygon_side without
+    the levels."""
+    return plan_polygon_side(polygons)[:2]
 
 
 def pip_join(
@@ -372,10 +351,12 @@ def pip_join(
     needs poly_id + flat geom.
 
     broadcast_polys="auto" (default): ONE column-pruned aggregate
-    estimates the polygon side (rows x overhead + vertices x 16 bytes)
-    and picks broadcast iff it fits broadcast_budget_bytes — the
-    driver never collects an unbounded polygon side. The choice is
-    logged. True/False force a path (tests / operator override).
+    (plan_polygon_side) estimates the polygon side (rows x overhead +
+    vertices x 16 bytes) and collects its distinct cover levels; it
+    picks broadcast iff the estimate fits broadcast_budget_bytes — the
+    driver never collects an unbounded polygon side. The choice and
+    the cover levels are logged. True/False force a path (tests /
+    operator override).
 
     broadcast mode: the polygon side — cover cells AND ring
     coordinates — is collected ONCE and shipped per executor
@@ -386,9 +367,9 @@ def pip_join(
     shuffle mode: the at-scale fallback when the polygon side exceeds
     the broadcast budget — shuffle join on cell_id (AQE skew-join /
     explicit salting) with polygon coords joined per candidate. The
-    distinct-levels probe is a pure-JVM aggregate (_cover_level_col),
-    so nothing is persisted and the covering UDF runs exactly once,
-    inside the join's execution.
+    cover is built from JVM column expressions inside the join
+    (polygon_covering), its levels come from the planning aggregate,
+    nothing is persisted, and the refine is the only Python stage.
 
     salt_factor=None (default) is MEASURED in shuffle mode: one
     histogram aggregate (auto_salt_factor — the hot_cells diagnostic
@@ -400,8 +381,9 @@ def pip_join(
     """
     spark = points.sparkSession
 
+    if broadcast_polys == "auto" or not broadcast_polys:
+        n_polys, est_bytes, levels = plan_polygon_side(polygons, base_level, max_cells)
     if broadcast_polys == "auto":
-        n_polys, est_bytes = estimate_polygon_side_bytes(polygons)
         broadcast_polys = est_bytes <= broadcast_budget_bytes
         log.info(
             "pip_join auto plan: polygon side ~%d bytes (%d polys) -> %s",
@@ -412,34 +394,12 @@ def pip_join(
         rings, cover_rows, levels = _collect_rings_and_cover(
             polygons, base_level, max_cells
         )
-        if not cover_rows:
-            return points.select(*point_cols).limit(0).withColumn("poly_id", F.lit(""))
         cover = F.broadcast(spark.createDataFrame(cover_rows, COVER_ROW_SCHEMA))
     else:
-        # Distinct cover levels via the JVM mirror of covering_bbox's
-        # level choice — an aggregate over bboxes only (no cell
-        # explode, no pandas UDF, nothing persisted).
-        lv_rows = (
-            polygons.select(
-                F.array_min("geom.xs").alias("minx"),
-                F.array_min("geom.ys").alias("miny"),
-                F.array_max("geom.xs").alias("maxx"),
-                F.array_max("geom.ys").alias("maxy"),
-            )
-            .filter(F.col("minx").isNotNull())
-            .select(
-                _cover_level_col(
-                    F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-                    base_level, max_cells,
-                ).alias("level")
-            )
-            .distinct()
-            .collect()
-        )
-        levels = sorted({r["level"] for r in lv_rows})
-        if not levels:
-            return points.select(*point_cols).limit(0).withColumn("poly_id", F.lit(""))
         cover = polygon_covering(polygons, base_level, max_cells)
+    log.info("pip_join cover levels: %s", levels)
+    if not levels:
+        return points.select(*point_cols).limit(0).withColumn("poly_id", F.lit(""))
 
     # Point side stays 100% JVM (cells.cell_col — whole-stage codegen):
     # one scan, explode over the distinct cover levels (usually 2-4).

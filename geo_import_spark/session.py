@@ -14,6 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """CPUs this process may run on: the default local[N] width."""
+    return len(os.sched_getaffinity(0))
+
+
+def host_driver_memory() -> str:
+    """Default spark.driver.memory: 60% of the host's physical RAM,
+    leaving room for the Python workers and the OS."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{int(total * 0.6) >> 20}m"
+
+
 def get_spark(
     cpus: int | None = None,
     app: str = "geo-import-spark",
@@ -21,7 +33,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 8)
     # Real-cluster override: SPARK_GRAFT_MASTER=yarn|spark://... makes
@@ -40,7 +52,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # GC threads default to the MACHINE's core count (32 here) —

@@ -20,7 +20,7 @@ from geo_import_spark.session import get_spark  # noqa: E402
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     only = set(sys.argv[2:])
-    spark = get_spark(cpus=32, app="profile-queries")
+    spark = get_spark(app="profile-queries")
     qs = entrymod.queries()
     results = {}
     for name in sorted(qs):
